@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). Session is warmed with a
   * trivial job first so JVM/codegen startup isn't attributed to whichever
@@ -36,21 +34,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shuffle partitions default to the thread count (right for sf0.1),
-    // but scale audits at 10-100x the data must size partitions to FIT
+    // but scale audits at 10-100x the data must override them to FIT
     // MEMORY, not to core count — the same knob a real cluster turns
     // (SCALE.md sf10 audit: 59M-edge graph rounds at 32 partitions put
     // ~2M edges per task and OOMed a 24g heap; 128 partitions fit)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val sizing = GraftSession.resolve(sys.env)
+    val spark = GraftSession.start("graft-bench", sizing)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // warm JVM + codegen
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
@@ -161,7 +151,8 @@ object Bench {
     // same-pair measurement over re-probing a just-hammered host.
     val driftJson =
       if (only.isEmpty && !sys.env.get("SPARK_GRAFT_BENCH_DRIFT").contains("off"))
-        BenchDrift.control(sfDir, cpus, shuffleParts)
+        BenchDrift.control(sfDir, sizing.cpus.toString,
+          sizing.shufflePartitions.toString)
       else ""
 
     println(fitLine(driftJson)) // final stdout line — nothing may follow it

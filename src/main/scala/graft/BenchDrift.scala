@@ -353,9 +353,9 @@ object BenchDrift {
     */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val frag = control(sfDir, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
-      full = true, allowReuse = false)
+    val sizing = GraftSession.resolve(sys.env)
+    val frag = control(sfDir, sizing.cpus.toString,
+      sizing.shufflePartitions.toString, full = true, allowReuse = false)
     println("{" + frag.stripPrefix(",") + "}")
   }
 

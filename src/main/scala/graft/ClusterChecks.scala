@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingCandles
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-JVM execution evidence beyond the Verify catalog sweep: the
@@ -30,23 +29,15 @@ import org.apache.spark.sql.functions._
   *     transport for the expression family the catalog leans on.
   *
   * Usage: SPARK_HOME=/opt/spark tools/run_main.sh graft.ClusterChecks
-  * (the Verify catalog sweep under the same master is driven separately:
-  * SPARK_GRAFT_MASTER=local-cluster[2,8,4096] graft.Verify ...).
+  * (the Verify catalog sweep under the same master is driven separately,
+  * with GraftSession's master override set to local-cluster[2,8,4096]).
   */
 object ClusterChecks {
 
   def main(args: Array[String]): Unit = {
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,4096]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-checks")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.memory", "2g")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val master = "local-cluster[2,8,4096]"
+    val spark = GraftSession("graft-cluster-checks",
+      master = Some(master), shufflePartitions = Some(8))
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -659,15 +659,7 @@ object DeterminismAudit {
   def main(args: Array[String]): Unit = {
     val outPath = args(0)
     val sfDirs = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession("graft-determinism-audit")
     spark.sparkContext.setLogLevel("WARN")
 
     val entries = SparkEntry.catalogEntries.filter(_.oracle.isDefined).sortBy(_.name)

@@ -228,15 +228,7 @@ object DriftBounds {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outJson = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-drift-bounds")
-      .getOrCreate()
+    val spark = GraftSession("graft-drift-bounds")
     spark.sparkContext.setLogLevel("WARN")
     val results = runAll(spark, dir)
     results.toSeq.sortBy(_._1).foreach { case (e, (n, r, f, p)) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: `explain(formatted)` for the headline queries,
   * so the pushdown/broadcast/codegen claims in SCALE.md are a checked-in
   * artifact, not prose. Run: `sbt "runMain graft.DumpPlans"` after plan-
@@ -71,13 +69,10 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // pinned shape: PLANS.md is committed, and its partition counts and
+    // join choices must not move with the host's core count
+    val spark = GraftSession("graft-dump-plans",
+      master = Some("local[4]"), shufflePartitions = Some(4))
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — `explain(formatted)` of the headline queries\n\n")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints formatted physical plans for representative
   * queries so scan pruning (ReadSchema/PushedFilters), join strategies
   * (BroadcastHashJoin), and WholeStageCodegen spans can be inspected.
@@ -13,12 +11,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
     else Seq("etl_pipeline", "join_agg_revenue", "time_range_topk",
       "ann_lsh_topk", "dedup_minhash_lsh", "bollinger")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n=================== $n ===================")

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Post-mortem for individual sign-LSH misses (measurement main, like
-  * KCoreExperiment / MinhashSizingSmoke): given specific (vec_a, vec_b)
+  * MinhashSizingSmoke; the sf1 run is recorded in
+  * tools/lsh_miss_audit_sf1_r12.json): given specific (vec_a, vec_b)
   * pairs an exact oracle found but `Similarity.nearDupPairs` did not,
   * prove WHERE they were lost. For each pair it reports, from the same
   * quantization and the same seeded plane/band derivation as
@@ -38,8 +37,7 @@ object LshMissAudit {
     val bandBits = if (args.length > 4) args(4).toInt else 4
     val seed = if (args.length > 5) args(5).toLong else 12345L
 
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-lsh-miss-audit").getOrCreate()
+    val spark = GraftSession("graft-lsh-miss-audit")
     spark.sparkContext.setLogLevel("WARN")
 
     val wanted = pairs.flatMap(p => Seq(p._1, p._2)).distinct

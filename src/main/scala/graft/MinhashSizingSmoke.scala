@@ -1,7 +1,6 @@
 package graft
 
 import graft.textops.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what `Dedup.minhashConfigFor` claims (the r11 verdict #5
@@ -27,15 +26,7 @@ object MinhashSizingSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/graft_sf10"
     val nPlant = if (args.length > 1) args(1).toInt else 2000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "128"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-minhash-sizing")
-      .getOrCreate()
+    val spark = GraftSession("graft-minhash-sizing")
     spark.sparkContext.setLogLevel("WARN")
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")

@@ -141,21 +141,14 @@ object PlanFingerprints {
   val defaultOut = "tools/plan_fingerprints.json"
   val defaultAqeOut = "tools/plan_fingerprints_aqe.json"
 
-  /** The bench session shape (local[32], shuffle=32, AQE on) — the
-    * runtime pin must be taken under the config whose decisions it
-    * guards, not the tiny static-pin session.
+  /** The bench session shape (GraftSession's default sizing, AQE on) —
+    * the runtime pin must be taken under the config whose decisions it
+    * guards, not the tiny static-pin session. The committed pin was taken
+    * on a 32-core host (local[32], shuffle=32); other core counts must
+    * override the sizing to match it.
     */
   def aqeSessionFor(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession("graft-plan-fingerprints-aqe")
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
@@ -163,14 +156,8 @@ object PlanFingerprints {
   def sessionFor(sfDir: String): SparkSession = {
     // MUST mirror PlanFingerprintSpec's session knobs: static plan
     // selection depends on shuffle partitions + broadcast threshold
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession("graft-plan-fingerprints",
+      master = Some("local[4]"), shufflePartitions = Some(4))
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }

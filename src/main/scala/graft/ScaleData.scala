@@ -68,15 +68,7 @@ object ScaleData {
     val inDir = pos(0)
     val outDir = pos(1)
     val factor = if (pos.length > 2) pos(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scaledata")
-      .getOrCreate()
+    val spark = GraftSession("graft-scaledata")
     spark.sparkContext.setLogLevel("WARN")
     if (factsOnly) runFacts(spark, inDir, outDir, factor)
     else run(spark, inDir, outDir, factor)

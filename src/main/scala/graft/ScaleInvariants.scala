@@ -209,15 +209,7 @@ object ScaleInvariants {
     val only =
       if (!factsOnly) explicit
       else Some(explicit.map(_.intersect(factsSet)).getOrElse(factsSet))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scale-invariants")
-      .getOrCreate()
+    val spark = GraftSession("graft-scale-invariants")
     spark.sparkContext.setLogLevel("WARN")
     val results = runAll(spark, baseDir, scaledDir, only)
     // full JSON string escaping: the ERR path embeds e.getMessage, which

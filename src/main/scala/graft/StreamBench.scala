@@ -31,24 +31,10 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val nRows = if (args.nonEmpty) args(0).toLong else 10000000L
     val outJson = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER (e.g. local-cluster[2,8,4096]) measures the
-    // loops over real executor JVMs — the state store, checkpoint and
-    // stateful shuffle crossing processes (same override as Verify)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
-    }
-    val spark = builder.getOrCreate()
+    // a local-cluster[2,8,4096] master measures the loops over real
+    // executor JVMs — the state store, checkpoint and stateful shuffle
+    // crossing processes (same override as Verify)
+    val spark = GraftSession("graft-stream-bench")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -190,7 +176,7 @@ object StreamBench {
         "late drops or watermark regression in the candle loop")
 
     val json =
-      f"""{"n_rows":$nRows,"master":"$master","candle_loop":{"secs":$candleSecs%.1f,""" +
+      f"""{"n_rows":$nRows,"master":"${spark.sparkContext.master}","candle_loop":{"secs":$candleSecs%.1f,""" +
         f""""rows_per_sec":${nRows / candleSecs}%.0f,"batches":$b1,""" +
         f""""mean_batch_secs":$mean1%.2f,"max_batch_secs":$max1%.2f,""" +
         f""""peak_state_rows":$srows1,"peak_state_mb":${sbytes1 / 1e6}%.1f,""" +

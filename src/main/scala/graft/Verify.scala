@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,29 +9,11 @@ object Verify {
     // single-query iteration (the driver always calls with two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the multi-JVM
-    // evidence run uses local-cluster[2,8,4096] (separate EXECUTOR
-    // processes: real closure serialization, broadcast transport, and
-    // shuffle-over-network instead of same-JVM shortcuts). Executors
-    // forked by the worker need this application's classes on THEIR
-    // classpath (local[] inherits them; separate JVMs do not) — pass the
-    // driver's own classpath through, same-machine by definition here.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-    if (master.startsWith("local-cluster")) {
-      builder
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
-    }
-    val spark = builder.getOrCreate()
+    // the multi-JVM evidence run sets a local-cluster[2,8,4096] master
+    // (separate EXECUTOR processes: real closure serialization, broadcast
+    // transport, and shuffle-over-network instead of same-JVM shortcuts);
+    // GraftSession ships this application's classes to those executors
+    val spark = GraftSession("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failures must be LOUD: a silently-absent result dir reads as "query

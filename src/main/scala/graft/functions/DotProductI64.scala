@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -89,69 +88,71 @@ case class DotProductI64(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for the engine's native SQL functions, so they are
-  * callable from both the Column API (`expr("graft_dot(a, b)")`) and the
-  * ad-hoc SQL surface.
+/** SparkSessionExtensions wiring, and the ONLY registration path for the
+  * engine's native SQL functions: sessions built with
+  * `.withExtensions(new GraftExtensions)` (every `graft.GraftSession`, or
+  * `spark.sql.extensions=graft.functions.GraftExtensions` on a shared
+  * cluster) get the `graft_*` functions — callable from both the Column
+  * API (`expr("graft_dot(a, b)")`) and the ad-hoc SQL surface — plus the
+  * engine's optimizer rules.
   */
-object GraftFunctions {
-  private[functions] def lshKeysBuilder(exprs: Seq[Expression]): Expression = {
-    def intArg(i: Int): Int = exprs(i).eval().asInstanceOf[Number].intValue()
-    def longArg(i: Int): Long = exprs(i).eval().asInstanceOf[Number].longValue()
-    LshTableKeys(exprs(0), intArg(1), intArg(2), intArg(3), intArg(4), longArg(5))
-  }
+class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+  import GraftExtensions._
 
-  private[functions] def winnowBuilder(exprs: Seq[Expression]): Expression = {
-    def intArg(i: Int): Int = exprs(i).eval().asInstanceOf[Number].intValue()
-    def longArg(i: Int): Long = exprs(i).eval().asInstanceOf[Number].longValue()
-    RollingWinnow(exprs(0), intArg(1), intArg(2), longArg(3), longArg(4))
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    def fn(name: String, className: String, builder: Seq[Expression] => Expression): Unit =
+      e.injectFunction((
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(className, name),
+        builder))
+    fn("graft_dot", classOf[DotProductI64].getName, exprs => DotProductI64(exprs(0), exprs(1)))
+    fn("graft_lsh_keys", classOf[LshTableKeys].getName, lshKeysBuilder)
+    fn("graft_nfc", classOf[NfcNormalize].getName, exprs => NfcNormalize(exprs(0)))
+    fn("graft_might_contain",
+      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
+      mightContainBuilder)
+    fn("graft_jaro_winkler", classOf[JaroWinklerSim].getName,
+      exprs => JaroWinklerSim(exprs(0), exprs(1)))
+    fn("graft_winnow", classOf[RollingWinnow].getName, winnowBuilder)
+    fn("graft_lsh_sig", classOf[LshSignature].getName, lshSigBuilder)
+    fn("graft_lsh_first_agree", classOf[LshFirstAgree].getName, lshFirstAgreeBuilder)
+    // identity barrier (plans.OptimizerBarrier) as a callable function, so
+    // Column-API operators can mark an expensive projected expression
+    // non-duplicable (r18: TextAnalysis quality_score — a pushed-down
+    // quality-gate filter inlined the whole tokenize+quality tree below
+    // the scan spread, evaluating it once per row in the single scan task
+    // and AGAIN in the projection above)
+    fn("graft_barrier", classOf[graft.plans.OptimizerBarrier].getName,
+      exprs => graft.plans.OptimizerBarrier(exprs(0)))
+    // pure range joins (inequality-only conditions) rewrite to the
+    // bucketed equi-join plan instead of a nested loop / cartesian
+    e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    // naive levenshtein-bounded joins rewrite to the q-gram-blocked
+    // equi-join plan (FuzzyJoinRewrite scaladoc)
+    e.injectOptimizerRule(_ => graft.plans.FuzzyJoinRewrite)
   }
+}
 
-  private[functions] def lshSigBuilder(exprs: Seq[Expression]): Expression = {
-    def intArg(i: Int): Int = exprs(i).eval().asInstanceOf[Number].intValue()
-    def longArg(i: Int): Long = exprs(i).eval().asInstanceOf[Number].longValue()
-    LshSignature(exprs(0), intArg(1), intArg(2), longArg(3))
-  }
+object GraftExtensions {
+  private def intArg(exprs: Seq[Expression], i: Int): Int =
+    exprs(i).eval().asInstanceOf[Number].intValue()
+  private def longArg(exprs: Seq[Expression], i: Int): Long =
+    exprs(i).eval().asInstanceOf[Number].longValue()
 
-  private[functions] def lshFirstAgreeBuilder(exprs: Seq[Expression]): Expression = {
-    def intArg(i: Int): Int = exprs(i).eval().asInstanceOf[Number].intValue()
-    def longArg(i: Int): Long = exprs(i).eval().asInstanceOf[Number].longValue()
-    LshFirstAgree(exprs(0), intArg(1), intArg(2), intArg(3), intArg(4), longArg(5))
-  }
+  private def lshKeysBuilder(exprs: Seq[Expression]): Expression =
+    LshTableKeys(exprs(0), intArg(exprs, 1), intArg(exprs, 2), intArg(exprs, 3),
+      intArg(exprs, 4), longArg(exprs, 5))
 
-  // one registration per session, and none at all when the session was
-  // built withExtensions(GraftExtensions) (the functions already exist):
-  // createOrReplaceTempFunction logs a "replaced a previously registered
-  // function" WARN on re-registration, and register() is called per
-  // query-build (Similarity.quantized) — memoize like Tables.registerAll
-  // so driver-parsed stdout stays clean
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+  private def winnowBuilder(exprs: Seq[Expression]): Expression =
+    RollingWinnow(exprs(0), intArg(exprs, 1), intArg(exprs, 2), longArg(exprs, 3),
+      longArg(exprs, 4))
 
-  def register(spark: SparkSession): Unit = synchronized {
-    if (registered.add(spark) &&
-        !spark.sessionState.functionRegistry.functionExists(
-          new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"))) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_dot", exprs => DotProductI64(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_lsh_keys", lshKeysBuilder, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_nfc", exprs => NfcNormalize(exprs(0)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_might_contain", mightContainBuilder, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_jaro_winkler", exprs => JaroWinklerSim(exprs(0), exprs(1)), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_winnow", winnowBuilder, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_lsh_sig", lshSigBuilder, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_lsh_first_agree", lshFirstAgreeBuilder, "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_barrier", exprs => graft.plans.OptimizerBarrier(exprs(0)), "built-in")
-    }
-  }
+  private def lshSigBuilder(exprs: Seq[Expression]): Expression =
+    LshSignature(exprs(0), intArg(exprs, 1), intArg(exprs, 2), longArg(exprs, 3))
+
+  private def lshFirstAgreeBuilder(exprs: Seq[Expression]): Expression =
+    LshFirstAgree(exprs(0), intArg(exprs, 1), intArg(exprs, 2), intArg(exprs, 3),
+      intArg(exprs, 4), longArg(exprs, 5))
 
   /** graft_might_contain(bloomBytes, longValue): Spark's own
     * `BloomFilterMightContain` predicate (the expression behind runtime
@@ -160,75 +161,6 @@ object GraftFunctions {
     * longs — the same putLong/mightContainLong path) can prefilter a scan
     * as a foldable literal. Codegen'd; no UDF.
     */
-  private[functions] def mightContainBuilder(exprs: Seq[Expression]): Expression =
+  private def mightContainBuilder(exprs: Seq[Expression]): Expression =
     org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))
-}
-
-/** SparkSessionExtensions wiring: sessions built with
-  * `.withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) get the
-  * engine's native functions without manual registration — the standard
-  * deployment path for a Spark library on a shared cluster.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProductI64].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProductI64(exprs(0), exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_keys"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LshTableKeys].getName, "graft_lsh_keys"),
-      GraftFunctions.lshKeysBuilder _))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nfc"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[NfcNormalize].getName, "graft_nfc"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        "org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain",
-        "graft_might_contain"),
-      GraftFunctions.mightContainBuilder _))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaro_winkler"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[JaroWinklerSim].getName, "graft_jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinklerSim(exprs(0), exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_winnow"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[RollingWinnow].getName, "graft_winnow"),
-      GraftFunctions.winnowBuilder _))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_sig"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LshSignature].getName, "graft_lsh_sig"),
-      GraftFunctions.lshSigBuilder _))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_first_agree"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LshFirstAgree].getName, "graft_lsh_first_agree"),
-      GraftFunctions.lshFirstAgreeBuilder _))
-    // identity barrier (plans.OptimizerBarrier) as a callable function, so
-    // Column-API operators can mark an expensive projected expression
-    // non-duplicable (r18: TextAnalysis quality_score — a pushed-down
-    // quality-gate filter inlined the whole tokenize+quality tree below
-    // the scan spread, evaluating it once per row in the single scan task
-    // and AGAIN in the projection above)
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_barrier"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.plans.OptimizerBarrier].getName, "graft_barrier"),
-      (exprs: Seq[Expression]) => graft.plans.OptimizerBarrier(exprs(0))))
-    // pure range joins (inequality-only conditions) rewrite to the
-    // bucketed equi-join plan instead of a nested loop / cartesian
-    e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    // naive levenshtein-bounded joins rewrite to the q-gram-blocked
-    // equi-join plan (FuzzyJoinRewrite scaladoc)
-    e.injectOptimizerRule(_ => graft.plans.FuzzyJoinRewrite)
-  }
 }

@@ -87,7 +87,6 @@ object Triangles {
     // might_contain expression (the decontamination-path idiom); no
     // false negatives, and the inner join removes the fpp leakage — the
     // result is exactly the unfiltered plan's.
-    graft.functions.GraftFunctions.register(edges.sparkSession)
     val closing = dirRaw.select(col("a").as("b"), col("b").as("c"))
     // sizing count reads the CHECKPOINTED dir, not the und lineage
     val bytes = SafeBloom.serialized(

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.functions.GraftFunctions
 import graft.textops.{Curate, Decontaminate, Dedup, TextAnalysis, Vocab}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -587,7 +586,6 @@ object CorpusQueries {
         ORDER BY doc_id
       """.stripMargin.trim),
       (spark, dir) => {
-        GraftFunctions.register(spark)
         Tables.documents(spark, dir)
           .select(col("doc_id"),
             // DECOMPOSED e + U+0301, matching the oracle's 'e' || chr(769);

@@ -279,7 +279,8 @@ object GraphQueries {
         // r12: delta peeling — O(V) degree state, removed nodes
         // propagate decrements; measured 279.3 → 126.2 s at sf10 under
         // the same 28g/16t budget (ratio 18.8× → 7.9×, superlinearity
-        // gone), identical output (KCoreExperiment, GraphSpec property)
+        // gone), identical output (SCALE.md sf1/sf10 table, GraphSpec
+        // property)
         graft.Tails.orderedSmall(
           graft.operators.KCore.kCoreDelta(edges, k = 65, maxRounds = 12),
           col("node"))

@@ -720,7 +720,6 @@ object JoinQueries {
       """.stripMargin.trim),
       (spark, dir) => {
         import graft.textops.TextAnalysis.{hashBucketExpr, hashRawExpr}
-        graft.functions.GraftFunctions.register(spark)
         val canon = Tables.supplier(spark, dir).selectExpr(
           "s_suppkey AS c_key",
           s"""concat('w', cast(${hashBucketExpr("(s_suppkey * 3)", 500L)} as string),

@@ -488,7 +488,6 @@ object TextQueries {
         FROM sel GROUP BY doc_id ORDER BY doc_id
       """.stripMargin.trim),
       (spark, dir) => {
-        graft.functions.GraftFunctions.register(spark)
         val fps = Tables.documents(spark, dir)
           .select(col("doc_id"),
             regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("t"))

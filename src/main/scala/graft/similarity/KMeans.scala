@@ -227,7 +227,6 @@ object KMeans {
     */
   def train(embeddings: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) = {
     validate(embeddings, k, iters)
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     lloyd(embeddings, farthestFirstSeeds(embeddings, k), iters)
   }
 
@@ -240,7 +239,6 @@ object KMeans {
     validate(embeddings, k, iters)
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(oversample > 0, s"oversample must be > 0, got $oversample")
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     lloyd(embeddings, parallelSeeds(embeddings, k, rounds, oversample), iters)
   }
 }

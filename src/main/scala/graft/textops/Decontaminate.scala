@@ -86,7 +86,6 @@ object Decontaminate {
     */
   def contaminatedBloom(documents: DataFrame, isBench: Column,
                         n: Int = 8, fpp: Double = 0.03): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val bench = Dedup.shingles(documents.filter(isBench), n)
       .select(col("doc_id").as("bench_id"), col("shingle"))
     // two cheap passes over the SMALL side: row count for sizing (an
@@ -129,7 +128,6 @@ object Decontaminate {
     * shingle column, validating the spec. */
   def readBenchBloomFilter(spark: org.apache.spark.sql.SparkSession, path: String,
                            shingle: Column, n: Int = 8, fpp: Double = 0.03): Column = {
-    graft.functions.GraftFunctions.register(spark)
     val row = spark.read.parquet(path)
     require(row.columns.contains("bloom_spec"),
       s"$path has no bloom_spec column — not a writeBenchBloom artifact")

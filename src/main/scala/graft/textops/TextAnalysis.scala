@@ -154,7 +154,6 @@ object TextAnalysis {
     * CAST(x AS DOUBLE)/y — single deterministic division per row.
     */
   def withQuality(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val d = ensureToks(documents)
     val nTok = size(col("toks")).cast("long")
     val nChars = length(col("text")).cast("long")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import graft.textops.Decontaminate
 import org.apache.spark.sql.functions._
 
@@ -138,7 +137,6 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("graft_nfc composes decomposed sequences and passes NFC text through") {
-    GraftFunctions.register(spark)
     val out = Seq(("é", "café"), ("ascii", "plain"))
       .toDF("a", "b")
       .select(expr("graft_nfc(a)").as("na"), length(expr("graft_nfc(a)")).as("la"),

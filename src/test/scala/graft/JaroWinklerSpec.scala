@@ -29,7 +29,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("SQL expression (codegen path) equals the static scorer") {
-    graft.functions.GraftFunctions.register(spark)
     val pairs = duckDbReference.map { case (a, b, _) => (a, b) } ++ {
       val rnd = new scala.util.Random(42)
       val alpha = "abcdefghij#0123456789"
@@ -45,7 +44,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("null inputs yield null, not a crash") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Some("abc"), None: Option[String]), (None, Some("x")), (Some("abc"), Some("abd")))
       .toDF("a", "b")
       .selectExpr("graft_jaro_winkler(a, b) AS jw")

@@ -50,7 +50,6 @@ class RollingWinnowSpec extends SparkSpec {
   }
 
   test("codegen path (DataFrame) equals interpreted compute, incl. short/empty strings") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val alpha = "abcde f012"
     val strs = Seq("", "a", "abcdefg", "abcdefgh") ++ // below/at the 1-window edge
@@ -64,7 +63,6 @@ class RollingWinnowSpec extends SparkSpec {
   }
 
   test("null text yields null; n_windows matches the md5-hash formulation's count") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq(Option("abcdefghij"), None).toDF("t")
       .selectExpr(s"graft_winnow(t, $K, $W, $B, $M) AS fps").collect()
     assert(!rows(0).isNullAt(0) && rows(1).isNullAt(0))
@@ -78,7 +76,6 @@ class RollingWinnowSpec extends SparkSpec {
   }
 
   test("non-string input is rejected at ANALYSIS time, not with a runtime CCE") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(42L).toDF("x").selectExpr(s"graft_winnow(x, $K, $W, $B, $M)").collect()
     }

@@ -9,14 +9,8 @@ trait SparkSpec extends AnyFunSuite {
   // failure-injection cases (GraphSpec's reliable-checkpoint smoke) can
   // prove loops survive a first-attempt task crash. Deterministic tests
   // are unaffected: a real bug still throws on the retry and fails.
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .appName("graft-test")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession("graft-test",
+    master = Some("local[4, 2]"), shufflePartitions = Some(4))
 
   lazy val sf: String = "/root/testdata/sf0.001"
 }

@@ -144,8 +144,9 @@ class StreamingSpec extends SparkSpec {
   test("warehouse sink is replay-idempotent: a re-written batchId yields no duplicate rows") {
     import org.apache.spark.sql.functions._
     // multi-day multi-key corpus well beyond the fixture tables: 50 keys ×
-    // ~46 days, 200k deterministic ticks (same generator family as
-    // graft.ScaleSmoke), split into 3 chronological chunks = 3 micro-batches
+    // ~46 days, 200k deterministic ticks (the generator family of the
+    // SCALE.md 100x scale smoke), split into 3 chronological chunks =
+    // 3 micro-batches
     val n = 200000L
     val ticks = spark.range(n).select(
       pmod(hash(col("id") * 7), lit(50)).cast("long").as("user_id"),

@@ -316,7 +316,8 @@ if has_step margin; then
   rc=0
   : > /tmp/minhash_margin_r$ROUND.jsonl
   for sf in /root/testdata/sf0.01 "$BASE" $SF1 $SF10; do
-    SPARK_DRIVER_MEM=24g tools/run_main.sh graft.MinhashSizingSmoke "$sf" 200 \
+    SPARK_DRIVER_MEM=24g SPARK_GRAFT_SHUFFLE_PARTITIONS=128 \
+      tools/run_main.sh graft.MinhashSizingSmoke "$sf" 200 \
       | grep -E '^\{' >> /tmp/minhash_margin_r$ROUND.jsonl || rc=1
   done
   python3 - "$ROUND" <<'EOF' || rc=1
