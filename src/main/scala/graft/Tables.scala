@@ -84,40 +84,34 @@ object Tables {
       longConf(spark, "spark.graft.scan.spreadWidth")
         .getOrElse(defaultSpreadWidth.toLong)).toInt
 
+  /** The spread's byte cap, shared by the scan spread and its
+    * mid-pipeline reusers: true when `df` is estimated at most
+    * `spark.graft.scan.spreadMaxBytes`, else what the session's scan
+    * splits fill (parallelism × maxPartitionBytes); a cap ≤ 0 disables. */
+  private def underCap(spark: SparkSession, df: DataFrame): Boolean = {
+    val cap = longConf(spark, "spark.graft.scan.spreadMaxBytes")
+      .getOrElse(spark.sparkContext.defaultParallelism.toLong *
+        spark.sessionState.conf.filesMaxPartitionBytes)
+    cap > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
+  }
+
   /** The spread's size gate, reusable by operators that widen a
     * mid-pipeline stage DERIVED from this table (r18): true when the
     * relation is estimated too small for its scan to fill the session
     * anyway — exactly when a few-MB extra exchange buys parallelism and
     * a production-scale input must keep its natural splits. */
-  private[graft] def smallRelation(spark: SparkSession, dir: String, name: String): Boolean = {
-    val par = spark.sparkContext.defaultParallelism
-    val cap = longConf(spark, "spark.graft.scan.spreadMaxBytes")
-      .getOrElse(par.toLong * spark.sessionState.conf.filesMaxPartitionBytes)
-    cap > 0 &&
-      load(spark, dir, name).queryExecution.optimizedPlan.stats.sizeInBytes <= cap
-  }
+  private[graft] def smallRelation(spark: SparkSession, dir: String, name: String): Boolean =
+    underCap(spark, load(spark, dir, name))
 
   private def spread(df: DataFrame, name: String): DataFrame =
     spreadKey.get(name) match {
       case None => df
       case Some(key) =>
         val spark = df.sparkSession
-        val par = spark.sparkContext.defaultParallelism
-        val width = math.min(par.toLong,
-          longConf(spark, "spark.graft.scan.spreadWidth")
-            .getOrElse(defaultSpreadWidth.toLong)).toInt
-        if (width <= 1) df
-        else {
-          val cap = longConf(spark, "spark.graft.scan.spreadMaxBytes")
-            .getOrElse(par.toLong * spark.sessionState.conf.filesMaxPartitionBytes)
-          if (cap <= 0) df
-          else {
-            val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-            if (bytes <= cap)
-              df.repartition(width, org.apache.spark.sql.functions.col(key))
-            else df
-          }
-        }
+        val width = spreadWidthFor(spark)
+        if (width > 1 && underCap(spark, df))
+          df.repartition(width, org.apache.spark.sql.functions.col(key))
+        else df
     }
 
   /** Memoized per (session, dir, name): `spark.read.parquet` re-lists

@@ -127,8 +127,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // pure range joins (inequality-only conditions) rewrite to the
     // bucketed equi-join plan instead of a nested loop / cartesian
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
-    // naive levenshtein-bounded joins rewrite to the q-gram-blocked
-    // equi-join plan (FuzzyJoinRewrite scaladoc)
+    // levenshtein-bounded joins (naive SQL and operators/FuzzyJoin)
+    // rewrite to the PassJoin segment-blocked equi-join plan
+    // (FuzzyJoinRewrite scaladoc)
     e.injectOptimizerRule(_ => graft.plans.FuzzyJoinRewrite)
   }
 }

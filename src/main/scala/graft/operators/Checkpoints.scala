@@ -98,11 +98,7 @@ object Checkpoints {
     * that need the raw checkpoint too (e.g. a sizing `count()` that
     * should not pay the exchange). */
   def widen(out: DataFrame, keys: Seq[String]): DataFrame = {
-    val spark = out.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val width = math.min(par.toLong,
-      graft.Tables.longConf(spark, "spark.graft.scan.spreadWidth")
-        .getOrElse(16L)).toInt
+    val width = graft.Tables.spreadWidthFor(out.sparkSession)
     if (width <= 1) out
     else if (out.queryExecution.toRdd.getNumPartitions >= width) out
     else out.repartition(width, keys.map(org.apache.spark.sql.functions.col): _*)

@@ -4,181 +4,39 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Blocked fuzzy (approximate-string) join — the scalable
-  * entity-resolution shape. The reference resolves identities EXACTLY
-  * (symbol/ISIN equality, `etl/etl.py:272-299`); real dirty sources also
-  * need "PÉTROLE SA" ≈ "PETROLE SA". The naive formulation is a
-  * cartesian `levenshtein(a, b) <= d` — O(|L|·|R|) comparisons; this
-  * operator gets the same answer from q-gram BLOCKING: strings within
-  * edit distance d share at least one q-gram once lengths pass
-  * q·(d+1) — with q=3, d<=2, any true match shares a trigram (each edit
-  * destroys at most q grams). So candidates come from a trigram
-  * equi-join (work ∝ shared trigrams, shuffled by trigram key), and the
-  * expensive edit distance runs only on candidates.
+/** Fuzzy (approximate-string) join — the scalable entity-resolution
+  * shape. The reference resolves identities EXACTLY (symbol/ISIN
+  * equality, `etl/etl.py:272-299`); real dirty sources also need
+  * "PÉTROLE SA" ≈ "PETROLE SA". The naive formulation is a cartesian
+  * `levenshtein(a, b) <= d` — O(|L|·|R|) comparisons.
   *
-  * The gram guarantee needs max(len) ≥ q·(d+1); below that a pair can
-  * be within distance d and share NO q-gram ('IBM' ~ 'IBN'). Short
-  * strings therefore also emit LENGTH keys (`l:<n>`, mirroring
-  * `FuzzyJoinRewrite.sideKeys`): the left side emits len−d … len+d, the
-  * right side its own length, so a short-short pair meets iff
-  * |Δlen| ≤ d — a necessary condition for distance ≤ d. Mixed pairs
-  * (one short, one ≥ q·(d+1)) are covered by the gram keys: the longer
-  * side has > d·q grams, an edit destroys at most q, so a surviving
-  * gram is shared. Together the key sets lose NO true match at any
-  * length.
-  *
-  * Skew: ultra-common trigrams ("LLC", "SA ") are the hot keys;
-  * `maxGramDf` drops grams blocking more than that many right-side rows
-  * (they carry no discriminating signal — same policy as
-  * `Dedup.hotShingleMaxDf`). Candidates they would have contributed are
-  * covered by the match's OTHER, rarer grams except for degenerate
-  * all-boilerplate names. Length keys are never df-capped — capping
-  * them would silently reopen the short-string hole.
+  * This operator states exactly that predicate, in its bounded form
+  * `levenshtein(a, b, d) >= 0`, and lets `plans/FuzzyJoinRewrite` plan
+  * it: PassJoin segment keys for long strings, length keys for short
+  * ones, and the distance check as the join's residual. The rule is the
+  * one place blocking lives, so the operator, ad-hoc SQL and the naive
+  * catalog entries share one candidate plan. Above the rule's maximum
+  * distance (4) the join stays the nested loop the rule documents; the
+  * results are the same at any distance.
   */
 object FuzzyJoin {
 
-  /** Blocking keys for one side: `g:<gram>` for strings ≥ q chars, plus
-    * `l:<len>` keys when len < q·(d+1) (left fans out ±d, right emits
-    * its own length — each short pair meets on exactly the left key
-    * matching the right's length). NULL names emit no keys (inner
-    * null-rejecting semantics). Also carries `_nlen` (codepoint length)
-    * so the prefix filter can tell the short regime apart. */
-  private def keys(df: DataFrame, key: String, name: String, q: Int, d: Int,
-                   isLeft: Boolean): DataFrame = {
-    val thresh = q * (d + 1)
-    val gramArr =
-      s"""CASE WHEN length($name) >= $q
-            THEN transform(array_distinct(transform(sequence(1, length($name) - ${q - 1}),
-                                                    i -> substring($name, i, $q))),
-                           g -> concat('g:', g))
-            ELSE CAST(array() AS array<string>) END"""
-    val lenArr =
-      if (isLeft)
-        s"""CASE WHEN length($name) < $thresh
-              THEN transform(sequence(${-d}, $d),
-                             dl -> concat('l:', cast(length($name) + dl AS string)))
-              ELSE CAST(array() AS array<string>) END"""
-      else
-        s"""CASE WHEN length($name) < $thresh
-              THEN array(concat('l:', cast(length($name) AS string)))
-              ELSE CAST(array() AS array<string>) END"""
-    df.select(col(key), col(name))
-      .withColumn("bkey", explode(expr(s"array_union($gramArr, $lenArr)")))
-      .select(col(key), col("bkey"), length(col(name)).as("_nlen"))
-  }
-
-  /** PassJoin segment blocking (Li, Deng & Feng, ICDE 2011) — the
-    * candidate generator that stays near-linear where gram blocking
-    * saturates. Gram candidates are ∝ Σ_g dfL(g)·dfR(g): once the corpus
-    * outgrows its q-gram alphabet, every bucket grows with n and the
-    * stream goes quadratic no matter how the grams are filtered (the sf1
-    * audit measured 24–55× wall at 10× rows on hash-token names; the
-    * Ed-Join prefix cut it only ~2×). Segments don't saturate: keys are
-    * length-(L/(d+1)) EXACT substrings at fixed positions — far more
-    * selective than any trigram, and stats-free (pure expressions, no df
-    * aggregation), so the same scheme also fits the logical rewrite.
-    *
-    * Scheme: each RIGHT string of length L ≥ q·(d+1) splits into d+1
-    * contiguous segments (first (d+1−r) of length ⌊L/(d+1)⌋, last
-    * r = L mod (d+1) one longer); key = `p:<i>:<L>:<segment>`. Pigeonhole:
-    * ≤ d edits cannot touch all d+1 segments, so some segment appears in
-    * any true match EXACTLY, shifted by at most the net indels before it
-    * — i.e. starting within ±d of its home position. The LEFT side
-    * therefore enumerates, for every candidate right length
-    * L ∈ [max(thresh, m−d), m+d] and every segment i, its substrings of
-    * length ℓ_i(L) starting in [p_i−d, p_i+d] — ≤ (2d+1)²·(d+1) keys per
-    * string (75 at d=2), constant per row. Short strings (either side
-    * below the q·(d+1) threshold) keep the LENGTH-key path; the left
-    * emits l-keys up to thresh+d−1 so a long-left/short-right pair still
-    * meets on the right's own length key. Together: no true match lost
-    * at any length pair — driver-checked against the naive-join oracles
-    * and property-tested against the gram path.
+  /** Pairs within `levenshtein ≤ maxDist`, with both key and name
+    * columns and `dist` kept — the seam re-ranking passes (e.g.
+    * Jaro-Winkler scoring) build on, so the block-and-verify stage is
+    * shared, never re-derived. NULL names never match (inner
+    * semantics).
     */
-  private def segmentKeys(df: DataFrame, key: String, name: String, q: Int, d: Int,
-                          isLeft: Boolean): DataFrame = {
-    val k = d + 1
-    val thresh = q * k
-    // segment geometry for a right-length L (all integer arithmetic):
-    //   base = L div k, r = L % k
-    //   len_i = base + (i >= k - r ? 1 : 0)
-    //   pos_i = 1 + i*base + max(0, i - (k - r))   (1-based)
-    def segLen(L: String, i: String) =
-      s"(($L) div $k) + IF(($i) >= $k - ($L) % $k, 1, 0)"
-    def segPos(L: String, i: String) =
-      s"1 + ($i) * (($L) div $k) + greatest(0, ($i) - ($k - ($L) % $k))"
-    val segArr =
-      if (isLeft)
-        // every candidate right length, every segment, every allowed shift
-        s"""CASE WHEN length($name) >= ${thresh - d} THEN
-              flatten(transform(
-                sequence(greatest($thresh, length($name) - $d), length($name) + $d),
-                L -> flatten(transform(sequence(0, $d),
-                  i -> transform(
-                    filter(sequence(greatest(1, ${segPos("L", "i")} - $d),
-                                    ${segPos("L", "i")} + $d),
-                           p -> p <= length($name) - (${segLen("L", "i")}) + 1),
-                    p -> concat('p:', i, ':', L, ':',
-                                substring($name, p, ${segLen("L", "i")})))))))
-            ELSE CAST(array() AS array<string>) END"""
-      else
-        s"""CASE WHEN length($name) >= $thresh THEN
-              transform(sequence(0, $d),
-                i -> concat('p:', i, ':', length($name), ':',
-                            substring($name, ${segPos(s"length($name)", "i")},
-                                      ${segLen(s"length($name)", "i")})))
-            ELSE CAST(array() AS array<string>) END"""
-    val lenArr =
-      if (isLeft)
-        // up to thresh+d-1: a long-left/short-right pair meets on the
-        // right's own length key (the right only emits l: below thresh)
-        s"""CASE WHEN length($name) < ${thresh + d}
-              THEN transform(sequence(${-d}, $d),
-                             dl -> concat('l:', cast(length($name) + dl AS string)))
-              ELSE CAST(array() AS array<string>) END"""
-      else
-        s"""CASE WHEN length($name) < $thresh
-              THEN array(concat('l:', cast(length($name) AS string)))
-              ELSE CAST(array() AS array<string>) END"""
-    df.select(col(key), col(name))
-      .withColumn("bkey", explode(expr(
-        s"array_union(array_distinct($segArr), $lenArr)")))
-      .select(col(key), col("bkey"))
-  }
-
-  /** Ed-Join-style PREFIX filtering (Xiao et al., VLDB 2008) — the
-    * saturated-alphabet fix the sf1 scaling audit demanded: joining on
-    * EVERY gram makes the candidate stream ∝ Σ_g dfL(g)·dfR(g), which
-    * goes quadratic once the corpus outgrows its q-gram space (names
-    * over a small alphabet at 10× rows measured 24–55× wall, SCALE.md
-    * "fuzzy family"). LOSSLESS reduction: strings within edit distance d
-    * satisfy |Ga ∩ Gb| ≥ max(|Ga|,|Gb|) − d·q (each edit destroys or
-    * creates at most q distinct gram types), and the standard prefix
-    * lemma then guarantees that under ANY common total order the first
-    * d·q+1 grams of each side intersect. So each LONG-regime string
-    * keeps only its d·q+1 rarest grams (global df order, rarest first —
-    * the order that also shrinks buckets); short-regime strings
-    * (len < q·(d+1)) keep everything, because mixed pairs rely on
-    * one-sided coverage and length keys are never filtered. Exactness is
-    * driver-checked: the fuzzy entries' oracles state the NAIVE join.
-    *
-    * df stats come from the RIGHT side (grams unseen there order as df=0
-    * — they produce no candidates anyway); both sides rank under that
-    * one order, which is what the lemma requires.
-    */
-  private def prefixFiltered(side: DataFrame, key: String, rightDf: DataFrame,
-                             q: Int, d: Int): DataFrame = {
-    val keep = q * d + 1
-    val thresh = q * (d + 1)
-    val grams = side.filter(col("bkey").startsWith("g:") && col("_nlen") >= thresh)
-    val ranked = grams
-      .join(rightDf, Seq("bkey"), "left_outer")
-      .withColumn("_df", coalesce(col("_df"), lit(0L)))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(key)).orderBy(col("_df"), col("bkey"))))
-      .filter(col("_rn") <= keep)
-      .select(col(key), col("bkey"), col("_nlen"))
-    side.filter(!(col("bkey").startsWith("g:") && col("_nlen") >= thresh))
-      .unionByName(ranked)
+  def scoredCandidates(left: DataFrame, leftKey: String, leftName: String,
+                       right: DataFrame, rightKey: String, rightName: String,
+                       maxDist: Int = 2): DataFrame = {
+    // bounded form: banded O(len·d) DP that returns -1 above the bound
+    // instead of the full O(len²) matrix — the verify runs once per
+    // candidate pair, so the band is where the join's verify cost lives
+    def bounded = levenshtein(col(leftName), col(rightName), maxDist)
+    left.select(col(leftKey), col(leftName))
+      .join(right.select(col(rightKey), col(rightName)), bounded >= 0)
+      .withColumn("dist", bounded)
   }
 
   /** Best match per left row: (leftKey, rightKey, dist), dist <= maxDist,
@@ -186,61 +44,11 @@ object FuzzyJoin {
     * the distance are absent (inner semantics — the caller left-joins
     * back if unmatched rows must surface).
     */
-  /** Blocked candidate pairs CONFIRMED at `levenshtein ≤ maxDist`, with
-    * both name columns and `dist` kept — the seam re-ranking passes
-    * (e.g. Jaro-Winkler scoring) build on, so the expensive
-    * block-and-verify stage is shared, never re-derived.
-    */
-  def scoredCandidates(left: DataFrame, leftKey: String, leftName: String,
-                       right: DataFrame, rightKey: String, rightName: String,
-                       maxDist: Int = 2, q: Int = 3, maxGramDf: Long = 1000L,
-                       blocking: String = "segments"): DataFrame = {
-    val meets = blocking match {
-      case "segments" =>
-        // PassJoin: stats-free, near-linear under alphabet saturation —
-        // the default since the sf1 audit (maxGramDf does not apply:
-        // segment keys are position- and length-qualified, so a hot
-        // boilerplate token never becomes a hot key by itself)
-        segmentKeys(left, leftKey, leftName, q, maxDist, isLeft = true)
-          .join(segmentKeys(right, rightKey, rightName, q, maxDist, isLeft = false),
-            Seq("bkey"))
-      case "grams" | "grams-prefix" =>
-        val lg = keys(left, leftKey, leftName, q, maxDist, isLeft = true)
-        val rg0 = keys(right, rightKey, rightName, q, maxDist, isLeft = false)
-        val rDf = rg0.filter(col("bkey").startsWith("g:"))
-          .groupBy("bkey").agg(count(lit(1)).as("_df"))
-        val rg1 =
-          if (maxGramDf <= 0) rg0
-          else {
-            val keep = rDf.filter(col("_df") <= maxGramDf).select("bkey")
-            rg0.filter(col("bkey").startsWith("l:"))
-              .unionByName(rg0.join(keep, Seq("bkey")))
-          }
-        if (blocking == "grams-prefix")
-          prefixFiltered(lg, leftKey, rDf, q, maxDist)
-            .join(prefixFiltered(rg1, rightKey, rDf, q, maxDist), Seq("bkey"))
-        else lg.join(rg1, Seq("bkey"))
-      case other => throw new IllegalArgumentException(
-        s"unknown blocking scheme '$other' (segments | grams-prefix | grams)")
-    }
-    val cands = meets.select(col(leftKey), col(rightKey)).distinct()
-    cands
-      .join(left.select(col(leftKey), col(leftName)), Seq(leftKey))
-      .join(right.select(col(rightKey), col(rightName)), Seq(rightKey))
-      // bounded form: banded O(len·d) DP that bails out at maxDist+1
-      // (returns -1 above the bound) instead of the full O(len²) matrix —
-      // the confirm step runs once per candidate pair, so the band is
-      // where the blocked join's verify cost lives
-      .withColumn("dist", levenshtein(col(leftName), col(rightName), maxDist))
-      .filter(col("dist") >= 0)
-  }
-
   def bestMatch(left: DataFrame, leftKey: String, leftName: String,
                 right: DataFrame, rightKey: String, rightName: String,
-                maxDist: Int = 2, q: Int = 3, maxGramDf: Long = 1000L,
-                blocking: String = "segments"): DataFrame = {
+                maxDist: Int = 2): DataFrame = {
     val scored = scoredCandidates(left, leftKey, leftName,
-      right, rightKey, rightName, maxDist, q, maxGramDf, blocking)
+      right, rightKey, rightName, maxDist)
     val w = Window.partitionBy(col(leftKey)).orderBy(col("dist"), col(rightKey))
     scored.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)

@@ -12,9 +12,15 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
   * automatically. The naive formulation has no equi key, so Spark plans
   * BroadcastNestedLoopJoin / CartesianProduct: O(|L|·|R|) edit-distance
   * evaluations, the shape PlanAuditSpec bans. This is the fuzzy-join
-  * sibling of `RangeJoinRewrite` (SURVEY.md §7.3 tier (c)): users who
-  * write the natural predicate get `operators/FuzzyJoin`'s candidate
-  * plan without knowing it exists.
+  * sibling of `RangeJoinRewrite` (SURVEY.md §7.3 tier (c)) and the ONE
+  * place fuzzy-join blocking is planned: `operators/FuzzyJoin` states
+  * the naive predicate and relies on this rule, exactly like user SQL.
+  *
+  * Predicates read: `levenshtein(a, b) <= d` (and `< d+1`, in either
+  * orientation), and the bounded form `levenshtein(a, b, t) >= 0`, which
+  * holds iff distance ≤ t. Any other comparison of the bounded form is
+  * left alone: it returns −1 above t, so `levenshtein(a, b, t) <= d`
+  * also holds for every far pair and is no blocking predicate.
   *
   * Rewrite — ONE join, each side exploding a unified key column:
   *  - segment keys `p:<i>:<L>:<sub>` (PassJoin — see segmentKeysOf):
@@ -52,19 +58,23 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
   * is also why the scheme fits a rewrite, where no aggregation is
   * available to compute df stats.
   *
-  * Knobs: `spark.graft.fuzzyJoin.enabled` (default true),
-  * `spark.graft.fuzzyJoin.q` (default 3), max rewritten distance 4:
-  * the segment fan-out is (2d+1)²·(d+1) keys per left row (405 at d=4)
-  * and segment length L/(d+1) loses selectivity as d grows — past 4,
-  * no blocking scheme rescues the predicate and the nested loop is the
-  * honest plan.
+  * Knob: `spark.graft.fuzzyJoin.enabled` (default true; a value other
+  * than true/false fails naming the key). The short-regime boundary uses
+  * q = 3. Max rewritten distance 4: the segment fan-out is (2d+1)²·(d+1)
+  * keys per left row (405 at d=4) and segment length L/(d+1) loses
+  * selectivity as d grows — past 4, no blocking scheme rescues the
+  * predicate and the nested loop is the honest plan.
   */
 object FuzzyJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.fuzzyJoin.enabled", "true").toBoolean
-  private def q: Int =
-    conf.getConfString("spark.graft.fuzzyJoin.q", "3").toInt
+  private val enabledKey = "spark.graft.fuzzyJoin.enabled"
+  private val q = 3
+
+  private def enabled: Boolean = {
+    val v = conf.getConfString(enabledKey, "true")
+    v.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"$enabledKey must be true or false, got '$v'"))
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan
@@ -72,19 +82,22 @@ object FuzzyJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case j @ Join(_, _, _, Some(_), _) => rewrite(j).getOrElse(j)
     }
 
-  /** (levExpr, leftStr, rightStr, d) for `levenshtein(a, b) <= d` in any
-    * orientation; LessThan normalizes to d−1. */
+  /** (leftStr, rightStr, d) for a predicate that holds iff the edit
+    * distance is ≤ d, in any orientation; LessThan normalizes to d−1. */
   private def levReading(c: Expression): Option[(Expression, Expression, Int)] = {
     def lit(e: Expression): Option[Int] = e match {
       case Literal(v: Int, IntegerType) => Some(v)
       case Literal(v: Long, LongType) => Some(v.toInt)
       case _ => None
     }
+    def zero(e: Expression): Boolean = lit(e).contains(0)
     c match {
-      case LessThanOrEqual(Levenshtein(a, b, _), l) => lit(l).map(d => (a, b, d))
-      case LessThan(Levenshtein(a, b, _), l) => lit(l).map(d => (a, b, d - 1))
-      case GreaterThanOrEqual(l, Levenshtein(a, b, _)) => lit(l).map(d => (a, b, d))
-      case GreaterThan(l, Levenshtein(a, b, _)) => lit(l).map(d => (a, b, d - 1))
+      case LessThanOrEqual(Levenshtein(a, b, None), l) => lit(l).map(d => (a, b, d))
+      case LessThan(Levenshtein(a, b, None), l) => lit(l).map(d => (a, b, d - 1))
+      case GreaterThanOrEqual(l, Levenshtein(a, b, None)) => lit(l).map(d => (a, b, d))
+      case GreaterThan(l, Levenshtein(a, b, None)) => lit(l).map(d => (a, b, d - 1))
+      case GreaterThanOrEqual(Levenshtein(a, b, Some(t)), z) if zero(z) => lit(t).map(d => (a, b, d))
+      case LessThanOrEqual(z, Levenshtein(a, b, Some(t))) if zero(z) => lit(t).map(d => (a, b, d))
       case _ => None
     }
   }
@@ -102,12 +115,12 @@ object FuzzyJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     Cast(IntegralDivide(Cast(a, LongType), Literal(b.toLong)), IntegerType)
 
   /** PassJoin segment keys `p:<i>:<L>:<segment>` (Li, Deng & Feng, ICDE
-    * 2011) — mirrors `operators/FuzzyJoin.segmentKeys`, built as raw
-    * catalyst trees because this runs in the optimizer where nothing can
-    * be parsed or analyzed. Segments replaced the q-gram keys after the
-    * sf1 scaling audit: gram candidates are ∝ Σ_g dfL(g)·dfR(g) and go
-    * quadratic once the corpus outgrows its gram alphabet (measured 35×
-    * and 55× wall at 10× rows on hash-token names), while segment keys
+    * 2011), built as raw catalyst trees because this runs in the
+    * optimizer where nothing can be parsed or analyzed. Segments
+    * replaced the q-gram keys after the sf1 scaling audit: gram
+    * candidates are ∝ Σ_g dfL(g)·dfR(g) and go quadratic once the
+    * corpus outgrows its gram alphabet (measured 35× and 55× wall at
+    * 10× rows on hash-token names), while segment keys
     * are length- and position-qualified exact substrings of length
     * ~L/(d+1) — selective enough to stay near-linear AND stats-free,
     * which is the property a logical rewrite needs (no aggregation
@@ -195,7 +208,7 @@ object FuzzyJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     if (joinType != Inner && joinType != LeftSemi) {
       logInfo(s"graft.FuzzyJoinRewrite: SKIP — $joinType fuzzy join; a preserved " +
         "or negated side cannot tolerate the key explosion. " +
-        "Use operators/FuzzyJoin for argmax semantics, or accept the nested loop.")
+        "Use operators/FuzzyJoin.bestMatch for argmax semantics, or accept the nested loop.")
       return None
     }
 

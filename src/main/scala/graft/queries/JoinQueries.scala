@@ -358,7 +358,8 @@ object JoinQueries {
     // canonical names are synthesized from the supplier key (the shared
     // md5 idiom, so the oracle rebuilds byte-identical strings); each
     // dirty probe drops one character. Candidates come from the PassJoin
-    // segment equi-join — never a |dirty|×|canon| cartesian levenshtein — and
+    // segment equi-join that plans/FuzzyJoinRewrite plans for the
+    // operator's levenshtein predicate — never a |dirty|×|canon| cartesian — and
     // every probe must find its source at distance 1 (ties broken
     // (dist, key) in both engines)
     QueryDef(
@@ -412,7 +413,7 @@ object JoinQueries {
             "concat(substring(c_name, 1, cast(p - 1 as int)), substring(c_name, cast(p + 1 as int), 100)) AS d_name")
         graft.operators.FuzzyJoin
           .bestMatch(dirty, "d_key", "d_name", canon, "c_key", "c_name",
-            maxDist = 2, q = 3, maxGramDf = 0L)
+            maxDist = 2)
           .orderBy("d_key")
       }),
 
@@ -732,7 +733,7 @@ object JoinQueries {
             "concat(substring(c_name, 1, cast(p - 1 as int)), substring(c_name, cast(p + 1 as int), 100)) AS d_name")
         val scored = graft.operators.FuzzyJoin
           .scoredCandidates(dirty, "d_key", "d_name", canon, "c_key", "c_name",
-            maxDist = 2, q = 3, maxGramDf = 0L)
+            maxDist = 2)
           .withColumn("jw", round(expr("graft_jaro_winkler(d_name, c_name)"), 4))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("d_key")).orderBy(col("jw").desc, col("c_key"))

@@ -123,7 +123,7 @@ object SimilarityQueries {
 
     // the PRODUCTION configuration of the same operator: at a realistic
     // near-dup threshold (0.9 — crawl-dedup territory) the recall math in
-    // Similarity.nearDupCandidates lets 16 tables × 12-bit bands replace
+    // Similarity.nearDupPairs lets 16 tables × 12-bit bands replace
     // the oracle-threshold config's 128 × 4-bit (8× fewer candidate
     // instances, wider bands → far fewer spurious bucket collisions).
     // The synthetic embeddings top out at cos ≈ 0.6, so the corpus gets

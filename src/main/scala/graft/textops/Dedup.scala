@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline: exact (hash),
@@ -91,27 +91,55 @@ object Dedup {
     // one tokenize+shingle pass for the three consumers (sizes + both
     // join sides) — the minhashLshPairsWith checkpoint discipline (r17)
     val sh = graft.operators.Checkpoints.truncateSession(cappedShingles(documents, n, maxDf))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val a = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
+    val sizes = shingleSizes(sh)
+    withJaccard(sharedShingleCounts(sh, _ < _), sizes, sizes, minJaccard)
+  }
+
+  /** (doc_id, n_shingles): the per-doc size of a shingle table. */
+  private def shingleSizes(sh: DataFrame): DataFrame =
+    sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
+
+  /** (doc_a, doc_b, n_common) from the shingle-key self-join, pairs kept
+    * by `keep(doc_a, doc_b)` — the exact all-shared-shingle count behind
+    * both Jaccard and containment. */
+  private def sharedShingleCounts(sh: DataFrame, keep: (Column, Column) => Column): DataFrame =
+    sh.select(col("doc_id").as("doc_a"), col("shingle"))
+      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
+      .filter(keep(col("doc_a"), col("doc_b")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_common"))
-    // join the SAME aliased sizes via conditions, not per-side renamed
-    // projections (r18): distinct alias names inside the two build
-    // subtrees make them canonically unequal, so the sizes aggregation
-    // (a full pass over the shingle checkpoint) and its broadcast were
-    // built twice instead of reused
+
+  /** Candidate pairs (the two id columns of `cands`, a then b) with
+    * `n_common`, counted over the a-side rows of `shA` and the b-side
+    * rows of `shB` — the shingle-overlap half of the near-dup verify. */
+  private def overlapCounts(cands: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame = {
+    val Array(a, b) = cands.columns
+    cands
+      .join(shA.select(col("doc_id").as(a), col("shingle")), Seq(a))
+      .join(shB.select(col("doc_id").as(b), col("shingle").as("shingle_b")), Seq(b))
+      .filter(col("shingle") === col("shingle_b"))
+      .groupBy(col(a), col(b))
+      .agg(count(lit(1)).as("n_common"))
+  }
+
+  /** The Jaccard half of the verify: (a, b, n_common) pairs get their
+    * sizes and keep `jaccard ≥ minJaccard`. A self verify passes the SAME
+    * sizes frame twice: it is joined under two aliases via conditions, not
+    * per-side renamed projections (r18) — distinct alias names inside the
+    * two build subtrees make them canonically unequal, so the sizes
+    * aggregation and its broadcast were built twice instead of reused. */
+  private def withJaccard(inter: DataFrame, sizesA: DataFrame, sizesB: DataFrame,
+                          minJaccard: Double): DataFrame = {
+    val Array(a, b, _) = inter.columns
     inter
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
+      .join(sizesA.as("sa"), col(a) === col("sa.doc_id"))
+      .join(sizesB.as("sb"), col(b) === col("sb.doc_id"))
       .withColumn("n_a", col("sa.n_shingles"))
       .withColumn("n_b", col("sb.n_shingles"))
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
       .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
+      .select(a, b, "n_common", "n_a", "n_b", "jaccard")
   }
 
   /** [[jaccardPairs]] with PPJoin-style PREFIX FILTERING (Xiao et al.,
@@ -167,7 +195,7 @@ object Dedup {
       // arithmetic; the double product may sit a ULP above it
       .filter(least(col("n_a"), col("n_b")) >=
         lit(minJaccard) * greatest(col("n_a"), col("n_b")) - lit(1e-9))
-      .select("doc_a", "doc_b", "n_a", "n_b")
+      .select("doc_a", "doc_b")
       .distinct()
     // verify only candidate docs' shingles: the semi-join prune turns
     // "shuffle the whole shingle table twice" into a (usually broadcast)
@@ -175,17 +203,8 @@ object Dedup {
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id"))).distinct()
     val shCand = sh.join(candDocs, Seq("doc_id"), "left_semi")
-    val a = shCand.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = shCand.select(col("doc_id").as("doc_b"), col("shingle"))
-    cand
-      .join(a, Seq("doc_a"))
-      .join(b, Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
+    val sizes = docs.select(col("doc_id"), col("n_sh").as("n_shingles"))
+    withJaccard(overlapCounts(cand, shCand, shCand), sizes, sizes, minJaccard)
   }
 
   /** Asymmetric CONTAINMENT pairs: |A∩B| / |A| ≥ threshold — catches a
@@ -199,15 +218,10 @@ object Dedup {
                        maxDf: Int = hotShingleMaxDf): DataFrame = {
     // shared shingle materialization — see jaccardPairs (r17)
     val sh = graft.operators.Checkpoints.truncateSession(cappedShingles(documents, n, maxDf))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val a = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_shingles", "n_a"), Seq("doc_a"))
+    val sizes = shingleSizes(sh)
+      .withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_shingles", "n_a")
+    sharedShingleCounts(sh, _ =!= _)
+      .join(sizes, Seq("doc_a"))
       .withColumn("containment", col("n_common").cast("double") / col("n_a"))
       .filter(col("containment") >= minContainment)
       .select("doc_a", "doc_b", "n_common", "n_a", "containment")
@@ -339,7 +353,6 @@ object Dedup {
     s"SELECT doc_id, $bnd AS band, $key AS band_key FROM sig"
   }.mkString(" UNION ALL ")
 
-  /** Per-doc MinHash signature: one groupBy pass computing all k minima. */
   /** Self-describing tag of the signature scheme: a store built at one
     * shingle grain checked at another would yield est_jaccard ≈ 0 for
     * true dups — silent recall collapse, the same hazard class as the ANN
@@ -347,13 +360,33 @@ object Dedup {
     */
   def sigSpec(n: Int): String = s"v1:n$n:k${minhashParams.size}:p$minhashP"
 
-  def minhashSignatures(documents: DataFrame, n: Int = 5): DataFrame = {
-    val keyed = shingles(documents, n).withColumn("s", expr(shingleKeyExpr))
-    val aggs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
+  /** Per-doc MinHash signature (doc_id, mh0..mh{k-1}) of a (doc_id,
+    * shingle) table: one groupBy pass computing all k minima. */
+  private def signaturesOf(sh: DataFrame, params: Seq[(Long, Long)]): DataFrame = {
+    val aggs = params.zipWithIndex.map { case ((a, b), i) =>
       min((lit(a) * col("s") + lit(b)) % lit(minhashP)).as(s"mh$i")
     }
-    keyed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+    sh.withColumn("s", expr(shingleKeyExpr))
+      .groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  def minhashSignatures(documents: DataFrame, n: Int = 5): DataFrame =
+    signaturesOf(shingles(documents, n), minhashParams)
       .withColumn("sig_spec", lit(sigSpec(n)))
+
+  /** Fail LOUDLY when a persisted store was built under another scheme
+    * than the caller asks for: keys from another scheme still join
+    * (sporadic collisions), so without this check recall collapses to
+    * near zero with no error. `tagCol` holds the producer's scheme tag
+    * (`sig_spec`, `lsh_spec`). */
+  private[graft] def requireScheme(store: DataFrame, tagCol: String, expected: String,
+                                   producer: String): Unit = {
+    require(store.columns.contains(tagCol),
+      s"store has no $tagCol column — not a $producer output")
+    store.select(tagCol).head(1).foreach { r =>
+      require(r.getString(0) == expected,
+        s"scheme mismatch: store built with ${r.getString(0)}, caller requested $expected")
+    }
   }
 
   /** LSH band keys: unpivot the signature into (doc_id, band, band_key). */
@@ -388,12 +421,7 @@ object Dedup {
     */
   def lshOccupancy(documents: DataFrame, n: Int,
                    params: Seq[(Long, Long)], rows: Int): Map[String, Double] = {
-    val keyed = shingles(documents, n).withColumn("s", expr(shingleKeyExpr))
-    val aggs = params.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("s") + lit(b)) % lit(minhashP)).as(s"mh$i")
-    }
-    val bands = lshBandsWith(
-      keyed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*), params.size, rows)
+    val bands = lshBandsWith(signaturesOf(shingles(documents, n), params), params.size, rows)
     val occ = bands.groupBy(col("band"), col("band_key")).agg(count(lit(1)).as("c"))
     val r = occ.agg(
       count(lit(1)).cast("double").as("buckets"),
@@ -443,36 +471,23 @@ object Dedup {
     // the jaccardPairsPrefix discipline — O(corpus shingles) rows of
     // (doc_id, shingle), materialized once, read four times. At 100 TB
     // this is 1 corpus tokenization instead of 4.
-    val sh0 = graft.operators.Checkpoints.truncateSession(shingles(documents, n))
-    val keyed = sh0.withColumn("s", expr(shingleKeyExpr))
-    val aggs = params.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("s") + lit(b)) % lit(minhashP)).as(s"mh$i")
-    }
-    val bands = lshBandsWith(
-      keyed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*), params.size, rows)
-    val candidates = bands.as("x")
-      .join(bands.as("y"), Seq("band", "band_key"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val sh = sh0
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    val inter = candidates
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle").as("shingle_b")), Seq("doc_b"))
-      .filter(col("shingle") === col("shingle_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    // same-aliased sizes joined via conditions — see jaccardPairs (r18):
-    // one sizes aggregation + broadcast, reused by both sides
-    inter
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("sa.n_shingles") + col("sb.n_shingles") - col("n_common")))
-      .filter(col("jaccard") >= minJaccard)
+    val sh = graft.operators.Checkpoints.truncateSession(shingles(documents, n))
+    val bands = lshBandsWith(signaturesOf(sh, params), params.size, rows)
+    val sizes = shingleSizes(sh)
+    withJaccard(overlapCounts(bandPairs(bands, bands, "doc_a", "doc_b"), sh, sh), sizes, sizes,
+      minJaccard)
       .select("doc_a", "doc_b", "jaccard")
+  }
+
+  /** Distinct doc pairs sharing a band bucket, as columns (a, b): the one
+    * candidate emission of the MinHash tier. Self (`x eq y`, the batch
+    * corpus) keeps a < b, so each unordered pair once; otherwise every
+    * x × y collision (new × store). */
+  private def bandPairs(x: DataFrame, y: DataFrame, a: String, b: String): DataFrame = {
+    val met = x.as("x").join(y.as("y"), Seq("band", "band_key"))
+    (if (x eq y) met.filter(col("x.doc_id") < col("y.doc_id")) else met)
+      .select(col("x.doc_id").as(a), col("y.doc_id").as(b))
+      .distinct()
   }
 
   /** INCREMENTAL MinHash-LSH dedup: new documents checked against an
@@ -495,31 +510,10 @@ object Dedup {
     // see incrementalSigPairs)
     val shNew = shingles(newDocs, n)
     val shOld = shingles(store, n)
-    def bandsOf(sh: DataFrame): DataFrame = {
-      val keyed = sh.withColumn("s", expr(shingleKeyExpr))
-      val aggs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-        min((lit(a) * col("s") + lit(b)) % lit(minhashP)).as(s"mh$i")
-      }
-      lshBands(keyed.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*))
-    }
-    val candidates = bandsOf(shNew).as("x")
-      .join(bandsOf(shOld).as("y"), Seq("band", "band_key"))
-      .select(col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_store"))
-      .distinct()
-    val sizesNew = shNew.groupBy(col("doc_id")).agg(count(lit(1)).as("n_new"))
-    val sizesOld = shOld.groupBy(col("doc_id")).agg(count(lit(1)).as("n_old"))
-    val inter = candidates
-      .join(shNew.select(col("doc_id").as("doc_new"), col("shingle")), Seq("doc_new"))
-      .join(shOld.select(col("doc_id").as("doc_store"), col("shingle").as("shingle_b")), Seq("doc_store"))
-      .filter(col("shingle") === col("shingle_b"))
-      .groupBy(col("doc_new"), col("doc_store"))
-      .agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizesNew.withColumnRenamed("doc_id", "doc_new"), Seq("doc_new"))
-      .join(sizesOld.withColumnRenamed("doc_id", "doc_store"), Seq("doc_store"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_new") + col("n_old") - col("n_common")))
-      .filter(col("jaccard") >= minJaccard)
+    def bands(sh: DataFrame) = lshBands(signaturesOf(sh, minhashParams))
+    val cands = bandPairs(bands(shNew), bands(shOld), "doc_new", "doc_store")
+    withJaccard(overlapCounts(cands, shNew, shOld), shingleSizes(shNew), shingleSizes(shOld),
+      minJaccard)
       .select("doc_new", "doc_store", "jaccard")
   }
 
@@ -548,21 +542,11 @@ object Dedup {
     */
   def incrementalSigPairs(newDocs: DataFrame, storeSignatures: DataFrame,
                           n: Int = 5, minEstJaccard: Double = 0.7): DataFrame = {
-    // fail LOUDLY on a scheme mismatch: a store built at another shingle
-    // grain still band-joins (sporadic collisions) but every true dup
-    // estimates ≈ 0 — silent recall collapse, not an error, without this
-    require(storeSignatures.columns.contains("sig_spec"),
-      "store signatures have no sig_spec column — not a minhashSignatures output")
-    storeSignatures.select("sig_spec").head(1).foreach { r =>
-      require(r.getString(0) == sigSpec(n),
-        s"signature scheme mismatch: store built with ${r.getString(0)}, caller requested ${sigSpec(n)}")
-    }
+    requireScheme(storeSignatures, "sig_spec", sigSpec(n), "minhashSignatures")
     val k = minhashParams.size
     val newSigs = minhashSignatures(newDocs, n)
-    val candidates = lshBands(newSigs).as("x")
-      .join(lshBands(storeSignatures).as("y"), Seq("band", "band_key"))
-      .select(col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_store"))
-      .distinct()
+    val candidates =
+      bandPairs(lshBands(newSigs), lshBands(storeSignatures), "doc_new", "doc_store")
     val nMatch = (0 until k)
       .map(i => when(col(s"a.mh$i") === col(s"b.mh$i"), 1).otherwise(0))
       .reduce(_ + _)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** FuzzyJoinRewrite: the naive `levenshtein(a, b) <= d` inner join must
-  * produce identical PAIR MULTISETS through the q-gram-blocked rewrite,
+  * produce identical PAIR MULTISETS through the segment-blocked rewrite,
   * with no cartesian/nested-loop in the plan — across long strings
   * (gram guarantee), short strings (length-key path), duplicates
   * (multiplicity), and nulls/empties.
@@ -143,13 +143,41 @@ class FuzzyJoinRuleSpec extends SparkSpec {
     assert(result.passed, result.status.toString)
   }
 
-  test("property: PassJoin segments and Ed-Join prefix are LOSSLESS vs the unfiltered gram join") {
-    // the sf1 audit's fuzzy-family fix, both tiers: segment blocking
-    // (PassJoin pigeonhole) and gram-prefix filtering (prefix lemma)
-    // must confirm EXACTLY the pairs the plain all-grams join confirms —
-    // over random mixed-length corpora on a deliberately TINY alphabet
-    // (the saturated-gram regime where the schemes earn their keep),
-    // including the short/long boundary lengths both schemes special-case.
+  test("bounded levenshtein: only `>= 0` is read; `<= d` keeps every pair") {
+    // levenshtein(a, b, t) returns -1 above t, so `<= 2` holds for EVERY
+    // non-null pair and is no distance bound; `>= 0` is one
+    val l = Seq((1L, "acme"), (2L, "zenith"), (3L, "ab")).toDF("l_id", "l_name")
+    val r = Seq((10L, "acme"), (11L, "qqqqqqqqqq"), (12L, "b")).toDF("r_id", "r_name")
+    def both(f: => org.apache.spark.sql.DataFrame): (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+      val on = pairs(f)
+      spark.conf.set("spark.graft.fuzzyJoin.enabled", "false")
+      try (on, pairs(f)) finally spark.conf.set("spark.graft.fuzzyJoin.enabled", "true")
+    }
+    val (onAll, offAll) = both(l.join(r, levenshtein($"l_name", $"r_name", 2) <= 2))
+    assert(onAll == offAll && onAll.size == 9, onAll)
+    val (onNear, offNear) = both(l.join(r, levenshtein($"l_name", $"r_name", 2) >= 0))
+    assert(onNear == offNear && onNear == Seq((1L, 10L), (3L, 12L)), onNear)
+    assert(l.join(r, levenshtein($"l_name", $"r_name", 2) >= 0)
+      .queryExecution.executedPlan.toString.contains("_graft_gk_l"), "bounded >= 0 not rewritten")
+  }
+
+  test("a malformed enabled flag fails naming the key") {
+    spark.conf.set("spark.graft.fuzzyJoin.enabled", "yes")
+    try {
+      val l = leftRows.toDF("l_id", "l_name")
+      val r = rightRows.toDF("r_id", "r_name")
+      val e = intercept[IllegalArgumentException] {
+        l.join(r, levenshtein($"l_name", $"r_name") <= 2).queryExecution.optimizedPlan
+      }
+      assert(e.getMessage.contains("spark.graft.fuzzyJoin.enabled") && e.getMessage.contains("yes"),
+        e.getMessage)
+    } finally spark.conf.set("spark.graft.fuzzyJoin.enabled", "true")
+  }
+
+  test("property: scoredCandidates equals brute-force all pairs with lev <= d") {
+    // the operator states the bounded predicate and the rule blocks it;
+    // a deliberately TINY alphabet (the saturated regime segment keys
+    // were chosen for) and lengths across the short/long boundary
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import graft.operators.FuzzyJoin
     val alpha = Gen.oneOf('a', 'b', 'c')
@@ -162,13 +190,15 @@ class FuzzyJoinRuleSpec extends SparkSpec {
     val prop = Prop.forAll(gen) { case (ls, rs, d) =>
       val l = ls.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("l_id", "l_name")
       val r = rs.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("r_id", "r_name")
-      def run(blocking: String) = FuzzyJoin
-        .scoredCandidates(l, "l_id", "l_name", r, "r_id", "r_name",
-          maxDist = d, q = 3, maxGramDf = 0L, blocking = blocking)
+      val got = FuzzyJoin
+        .scoredCandidates(l, "l_id", "l_name", r, "r_id", "r_name", maxDist = d)
         .select($"l_id", $"r_id", $"dist").as[(Long, Long, Int)]
         .collect().toSeq.sorted
-      val base = run("grams")
-      run("segments") == base && run("grams-prefix") == base
+      val want = (for {
+        (a, li) <- ls.zipWithIndex; (b, ri) <- rs.zipWithIndex
+        dist = localLev(a, b) if dist <= d
+      } yield (li.toLong, ri.toLong, dist)).sorted
+      got == want
     }
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(10).withWorkers(1), prop)

@@ -105,6 +105,13 @@ class PlanAuditSpec extends SparkSpec {
       s"range join did not plan an equi-join:\n${plan.linesIterator.take(30).mkString("\n")}")
   }
 
+  test("the fuzzy operator entries plan through FuzzyJoinRewrite (fuzzy_match_names, jaro_winkler_rank)") {
+    Seq("fuzzy_match_names", "jaro_winkler_rank").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+      assert(plan.contains("_graft_gk_l"), s"$name: segment-blocked rewrite did not fire")
+    }
+  }
+
   test("weighted_sample plans TakeOrderedAndProject, not a global sort") {
     val plan = SparkEntry.queries("weighted_sample")(spark, sf)
       .queryExecution.executedPlan.toString

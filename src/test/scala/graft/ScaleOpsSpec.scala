@@ -159,35 +159,35 @@ class ScaleOpsSpec extends SparkSpec {
     val dirty = Seq((10L, "acme-crp"), (20L, "zenith-lbs"), (30L, "qqqqqq"))
       .toDF("d_key", "d_name")
     val out = FuzzyJoin.bestMatch(dirty, "d_key", "d_name", canon, "c_key", "c_name",
-        maxDist = 2, q = 3, maxGramDf = 0L)
+        maxDist = 2)
       .as[(Long, Long, Long)].collect().toSet
-    // typo'd probes resolve to their sources at distance 1; the
-    // no-shared-trigram probe is absent (inner semantics), never compared
+    // typo'd probes resolve to their sources at distance 1; the far
+    // probe is absent (inner semantics)
     assert(out == Set((10L, 1L, 1L), (20L, 2L, 1L)))
   }
 
-  test("fuzzy join: the gram-df cap drops boilerplate blocking keys") {
+  test("fuzzy join: a shared boilerplate suffix still resolves the exact match") {
     import graft.operators.FuzzyJoin
-    // every canonical shares the boilerplate suffix ' llc'; with the cap
-    // at 1 the common grams stop blocking and only the distinctive
-    // prefix grams generate candidates
+    // every canonical shares the boilerplate suffix ' llc' and differs
+    // from the probe by at least one edit outside it; only the exact
+    // source is within distance 0, and it must win the (dist, key) order
     val canon = (1L to 20L).map(i => (i, f"name$i%02d llc")).toDF("c_key", "c_name")
     val dirty = Seq((100L, "name07 llc")).toDF("d_key", "d_name")
-    val capped = FuzzyJoin.bestMatch(dirty, "d_key", "d_name", canon, "c_key", "c_name",
-        maxDist = 2, q = 3, maxGramDf = 1L)
+    val out = FuzzyJoin.bestMatch(dirty, "d_key", "d_name", canon, "c_key", "c_name",
+        maxDist = 2)
       .as[(Long, Long, Long)].collect().toSet
-    assert(capped == Set((100L, 7L, 0L))) // still found via its rare grams
+    assert(out == Set((100L, 7L, 0L)))
   }
 
   test("fuzzy join finds short-string matches via length keys (the sub-q*(d+1) band)") {
     import graft.operators.FuzzyJoin
-    // 'IBM' ~ 'IBN' at distance 1 share NO trigram — the gram guarantee
-    // only covers max(len) >= q*(d+1) = 9. The length-key fallback must
-    // block them anyway (round-7 ADVICE finding)
+    // 'IBM' ~ 'IBN' at distance 1 are below the segment threshold
+    // q*(d+1) = 6. The length-key fallback must block them anyway
+    // (round-7 ADVICE finding)
     val canon = Seq((1L, "IBN"), (2L, "SAP"), (3L, "ab"), (4L, "x")).toDF("c_key", "c_name")
     val dirty = Seq((10L, "IBM"), (20L, "SAPX"), (30L, "a"), (40L, "zz")).toDF("d_key", "d_name")
     val out = FuzzyJoin.bestMatch(dirty, "d_key", "d_name", canon, "c_key", "c_name",
-        maxDist = 1, q = 3, maxGramDf = 1000L)
+        maxDist = 1)
       .as[(Long, Long, Long)].collect().toSet
     // 'a' ties at dist 1 against 'ab' and 'x' → (dist, rightKey) break
     // picks c_key 3; 'zz' is dist 2 from everything → absent
@@ -197,9 +197,9 @@ class ScaleOpsSpec extends SparkSpec {
   test("fuzzy join blocking is complete: equals brute force for arbitrary edits (property)") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import graft.operators.FuzzyJoin
-    // no length floor: the gram guarantee covers max(len) >= q*(d+1);
-    // below it the length keys must make blocking complete (mirrors
-    // FuzzyJoinRewrite.sideKeys), so the generator spans 1..14 chars
+    // no length floor: segment keys cover max(len) >= q*(d+1); below
+    // it the length keys must make blocking complete
+    // (FuzzyJoinRewrite.sideKeys), so the generator spans 1..14 chars
     val alpha = Gen.oneOf('a', 'b', 'c')
     val genCanon = Gen.choose(1, 14).flatMap(n => Gen.listOfN(n, alpha).map(_.mkString))
     def edit(s: String, seed: Long): String = {
@@ -231,7 +231,7 @@ class ScaleOpsSpec extends SparkSpec {
       val out = FuzzyJoin.bestMatch(
           probes.toDF("d_key", "d_name"), "d_key", "d_name",
           canon.toDF("c_key", "c_name"), "c_key", "c_name",
-          maxDist = 2, q = 3, maxGramDf = 0L)
+          maxDist = 2)
         .as[(Long, Long, Long)].collect().toSet
       val brute = probes.flatMap { case (dk, dn) =>
         val scored = canon.map { case (ck, cn) => (ck, lev(dn, cn)) }.filter(_._2 <= 2)

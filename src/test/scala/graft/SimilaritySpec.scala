@@ -238,4 +238,29 @@ class SimilaritySpec extends SparkSpec {
       Similarity.incrementalNearDupPairs(newBatch, mem.drop("lsh_spec"), threshold = 0.9)
     }
   }
+
+  test("incrementalNearDupPairs equals the exact new×store set at cos >= 0.9, each pair once") {
+    // planted copies (cos ≈ 0.999) collide in most of the 16 tables, so
+    // an emit-every-collision path would repeat them; the minimal-table
+    // filter must emit each (vec_new, vec_store) exactly once
+    val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    val newBatch = e.filter(col("vec_id") < 40 || col("vec_id") % 97 === 0)
+      .select((col("vec_id") + lit(100000L)).as("vec_id"),
+        expr("transform(embedding, (x, i) -> cast(x as double) + IF(i = 0, 0.05D, 0D))")
+          .as("embedding"))
+    val got = Similarity.incrementalNearDupPairs(newBatch, Similarity.buildEmbeddingIndex(e),
+        threshold = 0.9)
+      .select("vec_new", "vec_store").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val qa = Similarity.quantized(newBatch)
+      .select(col("vec_id").as("vec_new"), col("q").as("qa"), col("norm2").as("na"))
+    val qb = Similarity.quantized(e)
+      .select(col("vec_id").as("vec_store"), col("q").as("qb"), col("norm2").as("nb"))
+    val exact = qa.crossJoin(qb)
+      .withColumn("cos", Similarity.cosine(Similarity.dotExpr("qa", "qb"), col("na"), col("nb")))
+      .filter(col("cos") >= 0.9)
+      .select("vec_new", "vec_store").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got.size == got.distinct.size, s"${got.size - got.distinct.size} duplicate pairs")
+    assert(got.toSet == exact, s"missing ${exact -- got.toSet}, extra ${got.toSet -- exact}")
+    assert(exact.size >= 40)
+  }
 }
